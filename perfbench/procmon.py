@@ -73,7 +73,7 @@ class ProcessTree:
 class PeakRss:
     """Samples the tree's summed RSS on a background thread."""
 
-    def __init__(self, tree: ProcessTree, interval_s: float = 0.1):
+    def __init__(self, tree: ProcessTree, interval_s: float = 0.25):
         self.tree = tree
         self.interval_s = interval_s
         self.peak = 0

@@ -3,9 +3,10 @@
     python3 perfbench/run.py --workload clips_window --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. Generates (or reuses) the seeded inputs, sets
-up a Spark session several times (``setup_s`` is the median), runs the
-workload's measured streaming query, checks its output with the workload's
-oracle and prints one JSON line as the last line of standard output:
+up a Spark session several times (``setup_s`` is the median), warms the JVM
+with an untimed run of the workload's streaming query, runs the measured
+query, checks its output with the workload's oracle and prints one JSON line
+as the last line of standard output:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -255,6 +256,9 @@ def main(argv: list[str]) -> int:
             listener = ProgressListener()
             spark.streams.addListener(listener)
         ctx = Ctx(spark, run_dir, inputs, ProcessTree(), trace=bool(args.trace), listener=listener)
+        t_warm = time.perf_counter()
+        wl.warm_query(ctx)
+        log(f"untimed warm-up query {time.perf_counter() - t_warm:.1f} s")
         res = wl.measure(ctx)
         t_check = time.perf_counter()
         failed = sorted(set(res.uncommitted) | set(wl.check(ctx, res)))

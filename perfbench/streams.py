@@ -88,11 +88,17 @@ def input_rows(progress: list[dict], source: int | None = None) -> int:
     return sum(int(p["sources"][source].get("numInputRows") or 0) for p in progress)
 
 
-def wait_rows(query, listener, expected: int, skip: int = 0, timeout_s: float = 120.0) -> list[dict]:
+def wait_rows(
+    query, listener, expected: int, skip: int = 0, timeout_s: float = 120.0, poll_s: float = 0.2
+) -> list[dict]:
     """Progress events after the first ``skip`` once they account for
     ``expected`` input rows (the event of a batch is posted just after its
     commit). If the query dies or the rows never arrive, returns what was
-    committed: the missing files then count as failed operations."""
+    committed: the missing files then count as failed operations.
+
+    Polls every ``poll_s``: each poll copies every progress event over py4j,
+    and a tight loop would take CPU from the query it waits for. Commit times
+    come from the sink wrapper, so the poll interval does not bound them."""
     deadline = time.time() + timeout_s
     while True:
         prog = query_progress(query, listener)[skip:]
@@ -101,7 +107,7 @@ def wait_rows(query, listener, expected: int, skip: int = 0, timeout_s: float = 
         if not query.isActive or time.time() > deadline:
             print(f"[perfbench] query stopped at {input_rows(prog)}/{expected} rows: {query.exception()}", file=sys.stderr)
             return prog
-        time.sleep(0.02)
+        time.sleep(poll_s)
 
 
 def trigger_start(p: dict) -> float:

@@ -26,9 +26,10 @@ def _run(cwd, *args, timeout=300):
     return subprocess.run(cmd, cwd=cwd, capture_output=True, text=True, timeout=timeout)
 
 
-#: the workloads of BENCHMARK.json plus clips_window_1c, the one-core leg of
-#: scaling_eff_1to4 that summary.py runs on request
-WORKLOADS = [w["name"] for w in SPEC["workloads"]] + ["clips_window_1c"]
+#: the workloads of BENCHMARK.json plus the two that summary.py runs on
+#: request: clips_window_1c, the one-core leg of scaling_eff_1to4, and
+#: audio_dedup
+WORKLOADS = [w["name"] for w in SPEC["workloads"]] + ["clips_window_1c", "audio_dedup"]
 
 
 @pytest.mark.parametrize("trace", [0, 1])

@@ -50,7 +50,7 @@ _ROCKSDB_COMMIT = (
     "rocksdbCommitCheckpointLatency",
     "rocksdbCommitFileSyncLatencyMs",
 )
-PREFIX_REPEATS = 5
+PREFIX_REPEATS = 3
 #: wall-clock self-time layers of the throughput window, reported as
 #: ``self.<layer>_ms`` on every workload
 SELF_LAYERS = (

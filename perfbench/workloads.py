@@ -1,10 +1,10 @@
 """The four benchmark workloads, driven through the package's public API.
 
 Each workload knows how to size and generate its inputs for a seed, warm a
-fresh session, run its measured streaming query, and check the query's
-output against an independent batch computation (the oracle). Sizes scale
-with ``--seconds`` so that the measured part takes about that long on a
-4-core host; the tiny smoke size is ``seconds=1``.
+fresh session, warm the JVM with an untimed run of its streaming query,
+run the measured query, and check the query's output against an
+independent batch computation (the oracle). Sizes scale with ``--seconds``;
+the tiny smoke size is ``seconds=1``.
 """
 
 from __future__ import annotations
@@ -47,11 +47,13 @@ from .streams import (
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
-#: open-loop live feed of clips_window: files per second and clips per file
-#: (250 clips/s, about half the chain's 4-core backlog rate of ~500 clips/s
-#: when the benchmark was defined); recorded in BENCHMARK.json
-LIVE_FILES_PER_S = 125
-LIVE_ROWS_PER_FILE = 2
+#: open-loop live feed of clips_window: files per second and clips per file,
+#: 250 clips/s (recorded in BENCHMARK.json). A live batch costs about a
+#: second plus ~10 ms per file, so 25 files/s keeps the query well below the
+#: file rate it can sustain; at 125 files/s of 2 clips it was close to it and
+#: the open-loop latencies swung by a quarter from run to run
+LIVE_FILES_PER_S = 25
+LIVE_ROWS_PER_FILE = 10
 CLIPS_ROWS_PER_FILE = 250
 #: input rows of the tiny batch run that warms a fresh session
 WARM_ROWS = 32
@@ -126,6 +128,18 @@ def _latencies(commits: list, due: list[float]) -> list[float]:
     return [(c - d) * 1000.0 for c, d in zip(commits, due) if c is not None]
 
 
+def warm_run(ctx: Ctx, query, pairs: list[tuple[str, str]], rows: int) -> None:
+    """Land the ``(file, source dir)`` pairs, wait until the query has
+    consumed their ``rows``, then stop the query."""
+    try:
+        t = time.time()
+        for f, dest in pairs:
+            land_backlog([f], dest, t)
+        wait_rows(query, ctx.listener, rows)
+    finally:
+        query.stop()
+
+
 def clip_features(df: DataFrame) -> DataFrame:
     """duration validation -> fused Arrow decode+features -> transcript
     normalisation (the headline chain up to the window)."""
@@ -164,6 +178,12 @@ class Workload:
         stages (Python workers, code generation)."""
         raise NotImplementedError
 
+    def warm_query(self, ctx: Ctx) -> None:
+        """Untimed, after the set-ups: run the measured streaming query over
+        its first input file (per stream) into a throwaway sink, so that the measured
+        query starts on a warm JVM (compiled operators, state store, sink
+        paths) instead of paying a cold start that varies from run to run."""
+
     def measure(self, ctx: Ctx) -> Result:
         raise NotImplementedError
 
@@ -193,7 +213,7 @@ class ClipsWindow(Workload):
     live = True
 
     def backlog_files(self) -> int:
-        return max(4, round(1.2 * self.seconds))
+        return max(4, round(9.6 * self.seconds))
 
     def live_files(self) -> int:
         return max(10, 20 * self.seconds) if self.live else 0
@@ -211,7 +231,7 @@ class ClipsWindow(Workload):
         df = ctx.spark.read.schema(CLIPS_SCHEMA).parquet(ctx.inputs.files("backlog")[0]).limit(WARM_ROWS)
         clip_features(df).agg(F.sum("rms")).collect()
 
-    def _query(self, ctx: Ctx, src: str, sink):
+    def _query(self, ctx: Ctx, src: str, sink, cp: str = "cp"):
         flow = Flow(
             load_stream(src, name="clips", schema=CLIPS_SCHEMA),
             lambda package: package.apply(lambda name, df: clip_windows(clip_features(df), "2 hours")),
@@ -222,9 +242,16 @@ class ClipsWindow(Workload):
         writer = (
             agg.writeStream.outputMode("update")
             .foreachBatch(sink)
-            .option("checkpointLocation", ctx.path("cp"))
+            .option("checkpointLocation", ctx.path(cp))
         )
         return writer.start(), t1 - t0, time.time() - t1
+
+    def warm_query(self, ctx: Ctx) -> None:
+        src = ctx.mkdir("warm_src")
+        sink = TimedSink(ExactlyOnceParquetSink(ctx.path("warm_out"), dedup_keys=["codec", "window_start"]))
+        rows = ctx.inputs.manifest()["streams"]["backlog"]["rows"][0]
+        q = self._query(ctx, src, sink, cp="warm_cp")[0]
+        warm_run(ctx, q, [(ctx.inputs.files("backlog")[0], src)], rows)
 
     def measure(self, ctx: Ctx) -> Result:
         man = ctx.inputs.manifest()["streams"]
@@ -373,7 +400,7 @@ class ClipsWindow1c(ClipsWindow):
     live = False
 
     def backlog_files(self) -> int:
-        return max(1, round(0.3 * self.seconds))
+        return max(1, round(2.4 * self.seconds))
 
 
 # --------------------------------------------------------------------------
@@ -387,7 +414,7 @@ class JoinMerge(Workload):
     rows_per_file = 1000
 
     def n_files(self) -> int:
-        return max(2, round(0.6 * self.seconds))
+        return max(2, round(1.2 * self.seconds))
 
     def input_name(self, seed: int) -> str:
         return f"join-s{seed}-{self.n_files()}x{self.rows_per_file}"
@@ -413,7 +440,7 @@ class JoinMerge(Workload):
             .distinct()
         )
 
-    def _query(self, ctx: Ctx, l_src: str, r_src: str, sink):
+    def _query(self, ctx: Ctx, l_src: str, r_src: str, sink, cp: str = "cp"):
         t0 = time.time()
         n = self.files_per_trigger
         flow = Flow(
@@ -423,11 +450,19 @@ class JoinMerge(Workload):
         )
         joined = flow.dataframes(ctx.spark)["clips"]
         t1 = time.time()
-        q = joined.writeStream.outputMode("append").foreachBatch(sink).option("checkpointLocation", ctx.path("cp")).start()
+        q = joined.writeStream.outputMode("append").foreachBatch(sink).option("checkpointLocation", ctx.path(cp)).start()
         return q, t1 - t0, time.time() - t1
 
     def warm(self, ctx) -> None:
         self._batch_join(ctx.spark, ctx.inputs.files("clips")[:1], ctx.inputs.files("side")[:1]).count()
+
+    def warm_query(self, ctx: Ctx) -> None:
+        man = ctx.inputs.manifest()["streams"]
+        l_src, r_src = ctx.mkdir("warm_src_clips"), ctx.mkdir("warm_src_side")
+        sink = TimedSink(KeyedMergeSink(ctx.path("warm_out"), keys=["clip_id"]))
+        q = self._query(ctx, l_src, r_src, sink, cp="warm_cp")[0]
+        pairs = [(ctx.inputs.files("clips")[0], l_src), (ctx.inputs.files("side")[0], r_src)]
+        warm_run(ctx, q, pairs, man["clips"]["rows"][0] + man["side"]["rows"][0])
 
     def measure(self, ctx: Ctx) -> Result:
         man = ctx.inputs.manifest()["streams"]
