@@ -1,4 +1,4 @@
-.PHONY: test package submit submit-stream bench bench-compare oracle plans
+.PHONY: test package submit submit-stream bench bench-compare perfbench perfbench-test oracle plans
 
 test:
 	python -m pytest tests/ -x -q
@@ -31,6 +31,16 @@ bench:
 
 bench-compare:
 	python bench.py --compare $${BASELINE:?set BASELINE=BENCH_rNN.json}
+
+# one benchmark run, one JSON line: make perfbench W=join_merge SEED=1 TRACE=0
+W ?= join_merge
+SEED ?= 1
+TRACE ?= 0
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 10 --trace $(TRACE)
+
+perfbench-test:
+	python3 -m pytest -q perfbench/tests
 
 oracle:
 	python scripts/check_oracle.py /root/testdata/sf0.01

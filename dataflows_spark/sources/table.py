@@ -146,5 +146,6 @@ class SnapshotTable:
             return
         spark = batch.sparkSession
         existing = spark.read.parquet(current)
-        kept = existing.join(batch.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
+        # a left_anti result does not depend on duplicate right-side keys
+        kept = existing.join(batch.select(*keys), on=keys, how="left_anti")
         self.overwrite(kept.unionByName(batch))

@@ -22,6 +22,14 @@ semantics. Structured-Streaming-native re-expression:
   snapshot-pointer parquet table
   (:class:`~dataflows_spark.sources.table.SnapshotTable`), the
   in-sandbox fallback where the Iceberg runtime jar is absent.
+
+Run-once rule: a ``foreachBatch`` frame is a ``LogicalRDD`` over the
+uncached micro-batch plan, so every extra action or self-reference on
+it re-runs that plan — for a stateful query, its state stores load,
+update and commit again. A sink that reads its batch more than once
+materializes it first (``cache()`` + one action, ``unpersist()`` in a
+``finally``) or folds the extra read into the one write, as
+:class:`ExactlyOnceParquetSink` does with ``observe``.
 """
 
 from __future__ import annotations
@@ -139,13 +147,21 @@ class KeyedMergeSink:
     otherwise) each batch runs a real SQL ``MERGE INTO`` so the engine
     only rewrites files containing matched keys. Without it, ``path``
     names a :class:`SnapshotTable` parquet fallback with the same
-    upsert semantics."""
+    upsert semantics.
+
+    Each call caches the deduplicated batch and counts it once (the
+    run-once rule above): the merge reads the batch more than once —
+    the SnapshotTable rewrite takes its keys for the anti-join and its
+    rows for the union — and every read scans the cache instead of
+    re-running the upstream stateful plan and its state stores. An
+    empty batch is not merged once the table exists: a no-data
+    (watermark-advance) batch would otherwise rewrite the whole
+    snapshot as a new version and evict real time-travel history."""
 
     def __init__(
         self,
         path: str | None = None,
         keys: list[str] | None = None,
-        ordering: str | None = None,
         iceberg_table: str | None = None,
     ):
         if not keys:
@@ -155,7 +171,6 @@ class KeyedMergeSink:
         self.table = SnapshotTable(path) if path else None
         self.iceberg_table = iceberg_table
         self.keys = keys
-        self.ordering = ordering
 
     def _merge_iceberg(self, batch: DataFrame) -> None:
         spark = batch.sparkSession
@@ -180,11 +195,23 @@ class KeyedMergeSink:
             spark.catalog.dropTempView(view)
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
-        batch = df.dropDuplicates(self.keys)
+        # cache()+unpersist, not eager_cache: its registry would pin
+        # every batch frame for the life of the stream
+        batch = df.dropDuplicates(self.keys).cache()
+        try:
+            if batch.count() == 0 and self._exists(batch.sparkSession):
+                return
+            if self.iceberg_table:
+                self._merge_iceberg(batch)
+            else:
+                self.table.merge(batch, self.keys)
+        finally:
+            batch.unpersist()
+
+    def _exists(self, spark: SparkSession) -> bool:
         if self.iceberg_table:
-            self._merge_iceberg(batch)
-        else:
-            self.table.merge(batch, self.keys)
+            return iceberg_available(spark) and spark.catalog.tableExists(self.iceberg_table)
+        return self.table.exists()
 
     def read(self, spark: SparkSession) -> DataFrame:
         if self.iceberg_table:

@@ -168,6 +168,48 @@ def test_keyed_merge_sink_upsert(spark, tmp_path):
     assert rows == {"c1": "v1", "c2": "v2", "c3": "v1"}
 
 
+def test_keyed_merge_sink_releases_its_batch_cache(spark, tmp_path, monkeypatch):
+    """The per-batch cache is unpersisted on return AND when the merge
+    raises — an unbounded stream must not accumulate cached batches."""
+    jsc = spark.sparkContext._jsc
+    sink = KeyedMergeSink(str(tmp_path / "kc"), keys=["clip_id"])
+    batch = spark.createDataFrame([("c1", "v1"), ("c2", "v1")], schema="clip_id string, val string")
+    base = len(jsc.getPersistentRDDs())
+    sink(batch, 0)
+    sink(batch, 1)
+    assert len(jsc.getPersistentRDDs()) == base
+
+    def failing_merge(self, batch, keys):
+        raise OSError("merge failed")
+
+    monkeypatch.setattr(SnapshotTable, "merge", failing_merge)
+    with pytest.raises(OSError, match="merge failed"):
+        sink(batch, 2)
+    assert len(jsc.getPersistentRDDs()) == base
+
+
+def test_keyed_merge_sink_skips_empty_batches(spark, tmp_path):
+    """A no-data (watermark-advance) batch must not rewrite the table:
+    each rewrite is a new version that evicts retained history. The
+    first-ever batch still commits, even empty, so read() has a schema."""
+    schema = "clip_id string, val string"
+    empty = spark.createDataFrame([], schema=schema)
+    first = KeyedMergeSink(str(tmp_path / "ke0"), keys=["clip_id"])
+    first(empty, 0)
+    assert first.read(spark).schema.simpleString() == "struct<clip_id:string,val:string>"
+    assert len(first.table.history()) == 1
+
+    sink = KeyedMergeSink(str(tmp_path / "ke"), keys=["clip_id"])
+    sink(spark.createDataFrame([("c1", "v1"), ("c2", "v1")], schema=schema), 0)
+    history = sink.table.history()
+    sink(empty, 1)
+    assert sink.table.history() == history
+    assert sorted((r["clip_id"], r["val"]) for r in sink.read(spark).collect()) == [
+        ("c1", "v1"),
+        ("c2", "v1"),
+    ]
+
+
 def test_checkpoint_kill_restart_exactly_once(spark, tmp_path):
     """North-rule checkpoint/resume: feed the clips stream in two halves,
     kill the query between them, restart from the same checkpointLocation,

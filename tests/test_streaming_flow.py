@@ -144,6 +144,38 @@ def test_flow_streaming_join_merge_restart(spark, tmp_path):
     assert all(r["transcript_v2_r"] is not None for r in rows)
 
 
+def test_flow_join_merge_runs_state_once_per_batch(spark, tmp_path):
+    """The merge sink reads its batch twice (anti-join keys + appended
+    rows); each micro-batch's symmetric-hash join must still run once.
+    A re-run re-adds every input row to the state metrics, so per data
+    batch ``numRowsUpdated`` would reach 2 × ``numInputRows``."""
+    l_in, r_in, cp, out = _prep_dirs(tmp_path, "l_in", "r_in", "cp", "out")
+    clips = clips_df(spark, 80, dur_min=200, dur_max=500).drop("bytes")
+    side = transcripts_side_df(spark, 80)
+    for lo, hi in (("clip-000000000000", "clip-000000000040"), ("clip-000000000040", "clip-9")):
+        cond = (F.col("clip_id") >= lo) & (F.col("clip_id") < hi)
+        clips.filter(cond).coalesce(1).write.mode("append").parquet(l_in)
+        side.filter(cond).coalesce(1).write.mode("append").parquet(r_in)
+
+    _, stats = Flow(
+        load_stream(l_in, name="clips", schema=CLIPS_SCHEMA_NOBYTES, max_files_per_trigger=1),
+        load_stream(r_in, name="side", schema=SIDE_SCHEMA, max_files_per_trigger=1),
+        stream_join("side", "clips", key="clip_id", watermark="10 minutes", time_bound="10 minutes"),
+        dump_stream(
+            out, cp, mode="merge", keys=["clip_id"], resources="clips",
+            process_all=True, output_mode="append",
+        ),
+    ).process(spark)
+
+    lineage = stats["lineage"]
+    data_batches = [b for b in lineage["per_batch"] if b["numInputRows"]]
+    assert len(data_batches) >= 2
+    for b in data_batches:
+        (join_op,) = [s for s in b["stateOperators"] if s["operatorName"] == "symmetricHashJoin"]
+        assert join_op["numRowsUpdated"] <= b["numInputRows"], b["batchId"]
+    assert lineage["state_rows_total"] <= lineage["total_input_rows"]
+
+
 def test_stream_deduplicate_within_watermark(spark, tmp_path):
     in_dir, cp, out = _prep_dirs(tmp_path, "din", "dcp", "dout")
     t0 = dt.datetime(2024, 1, 1)
